@@ -16,21 +16,6 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def scored_with_thresholds(
-    df: DataFrame, score: str, label: str, n_thresholds: int = 20
-) -> DataFrame:
-    """Cross the scored rows with an ``n_thresholds``-row threshold table
-    (broadcast — never shuffles the scored side). Kept as the explicit
-    row-expansion form; :func:`threshold_sweep` uses the expansion-free
-    aggregate fold instead."""
-    thresholds = df.sparkSession.range(n_thresholds).select(
-        (F.col("id") * (1.0 / n_thresholds)).alias("threshold")
-    )
-    return df.select(
-        F.col(score).alias("__score"), F.col(label).alias("__label")
-    ).crossJoin(F.broadcast(thresholds))
-
-
 def threshold_sweep(
     df: DataFrame, score: str, label: str, n_thresholds: int = 20
 ) -> DataFrame:

@@ -96,21 +96,22 @@ def _assign(xm: DataFrame, centroids: list[list[int]], dim: int) -> DataFrame:
 
 
 def _half_up(x: float) -> int:
-    """Spark's F.round(double) HALF_UP — half away from zero — the
-    update rule both engines share (same helper contract as
-    similarity.pq_train_codebooks' replica)."""
-    import math
+    """Spark's ``F.round(double)`` (HALF_UP, half away from zero), the
+    update rule both engines share. Spark rounds the double's decimal
+    repr, so this does too: ``floor(x + 0.5)`` would give 1 for
+    0.49999999999999994, where Spark gives 0."""
+    from decimal import ROUND_HALF_UP, Decimal
 
-    return int(math.floor(x + 0.5)) if x >= 0 else -int(math.floor(-x + 0.5))
+    return int(Decimal(repr(x)).quantize(Decimal(1), ROUND_HALF_UP))
 
 
 def _driver_lloyd(
     X, ids, k: int, iters: int
 ) -> list[list[int]]:
-    """Exact integer Lloyd on the driver (r14 cutover): identical init
-    (k smallest ids), assignment (int64 squared distance, argmin =
-    lowest cluster id on ties) and update (HALF_UP of the IEEE-double
-    mean per dimension; emptied clusters carry their centroid) as the
+    """Exact integer Lloyd on the driver: identical init (k smallest
+    ids), assignment (int64 squared distance, argmin = lowest cluster
+    id on ties) and update (HALF_UP of the IEEE-double mean per
+    dimension; emptied clusters carry their centroid) as the
     distributed loop — pinned by tests/test_clustering.py's
     loop ≡ cutover comparison and the unrolled-CTE DuckDB oracle."""
     import numpy as np
@@ -148,12 +149,12 @@ def lloyd_centroids(
     """Run ``iters`` Lloyd rounds; return the lazily-checkpointed
     quantized corpus and the final integer-micro centroids.
 
-    r14 driver cutover (same precedent as graph.py's union-find and
+    Driver cutover (same precedent as graph.py's union-find and
     similarity.py's Gram cutover): at or below ``driver_cutover_rows``
     the iteration runs on the driver in numpy int64 — the distributed
     loop's per-iteration cost at small n is NOT the data but Catalyst
     compiling a k x dim distance/aggregate expression tree per round
-    (measured r14: the fused 8x16 PQ fit spent ~7 s/job in
+    (measured: the fused 8x16 PQ fit spent ~7 s/job in
     planning+codegen on 500 rows). Both paths produce identical
     centroids (exact integer distances, HALF_UP double-mean update —
     pinned by loop ≡ cutover tests and the unrolled DuckDB oracle).

@@ -32,31 +32,34 @@ from pyspark.sql import types as T
 from orx_surgical_spark.operators.text import normalized_text, shingles, tokens
 
 # ---------------------------------------------------------------------------
-# Arrow (mapInArrow) shingle/MinHash kernels
+# Arrow (mapInArrow) text kernels
 #
 # The shingle + md5 pipeline is the single hottest expression chain in
-# the dedup tier (r13 decomposition: ~4.8 s/corpus-pass at sf3 for the
-# shingle chain alone; the banded md5 pass put minhash_candidates at
-# 8.6 s). Catalyst evaluates it as split + sequence + transform +
-# slice + array_join + array_distinct + per-shingle md5 — codegen'd,
-# but allocation-heavy row-at-a-time JVM work. The guide's §4.2 pattern
+# the dedup tier (measured at sf3: ~4.8 s/corpus-pass for the shingle
+# chain alone; the banded md5 pass put minhash_candidates at 8.6 s).
+# Catalyst evaluates it as split + sequence + transform + slice +
+# array_join + array_distinct + per-shingle md5 — codegen'd, but
+# allocation-heavy row-at-a-time JVM work. The guide's §4.2 pattern
 # (hand whole Arrow batches to native code: CPython's str.split and
 # hashlib.md5 are C) computes the IDENTICAL strings 3-5x faster
-# (measured r14, sf3: shingle table 5.17 -> 1.01 s, band rows
+# (measured at sf3: shingle table 5.17 -> 1.01 s, band rows
 # 6.18 -> 1.93 s, minhash_candidates end-to-end 8.06 -> 3.11 s,
-# byte-identical outputs), and the per-doc band kernel additionally
-# removes the explode + groupBy(doc_id) signature shuffle outright
-# (§2.4): bands are a per-document pure function, so the only exchange
+# byte-identical outputs), and the per-doc band and SimHash kernels
+# remove the explode + groupBy(doc_id) signature shuffle outright
+# (§2.4): both are per-document pure functions, so the only exchange
 # left in the LSH stage is the band-key bucket groupBy.
+#
+# All four kernels share one tokenizer (:func:`_tokens`), one window
+# helper (:func:`_windows`) and one batch loop (:func:`_text_kernel`).
 #
 # Exact-equality contract: the kernels replicate Spark's
 # ``split(lower(trim(text)), '\\s+')`` semantics precisely — trim
 # strips 0x20 only, lower() (ASCII + standard Unicode mappings), and
 # Java's ``\s`` is the ASCII class [ \t\n\x0B\f\r] (NOT Python's
 # Unicode \s). Pinned by tests/test_arrow_kernels.py, which compares
-# kernel vs expression output on adversarial fixtures (tabs, runs of
-# whitespace, short docs, empties) and on the parquet corpus; the
-# DuckDB oracles replay the same construction unchanged.
+# each kernel with its expression-form oracle on adversarial fixtures
+# (tabs, runs of whitespace, short docs, empty and NULL text) and on
+# the parquet corpus; the DuckDB oracles replay the same construction.
 # ---------------------------------------------------------------------------
 
 _WS_JAVA = re.compile("[ \t\n\x0b\f\r]+")  # Java regex \s, exactly
@@ -82,112 +85,86 @@ def _broadcast_threshold_bytes(spark) -> int:
         return 10 * 1024 * 1024
 
 
-def _shingle_list(text: str, n: int) -> list[str]:
-    """Distinct word n-gram shingles of one document — the Python
-    replica of ``shingles(tokens(text_col), n)``. First-occurrence
-    order (= array_distinct's order); [] for docs under n tokens.
+def _tokens(text: str | None) -> list[str]:
+    """The Python replica of ``tokens(text)``; [] for NULL text (a
+    string always splits into at least one token, so [] means NULL)."""
+    return [] if text is None else _WS_JAVA.split(text.strip(" ").lower())
 
-    Shingles are consecutive tokens joined by one space, so they are
-    substrings of the single-space re-join — sliced out by offset
-    instead of re-joined per shingle."""
-    toks = _WS_JAVA.split(text.strip(" ").lower())
-    k = len(toks) - n + 1
-    if k < 1:
-        return []
+
+def _windows(toks: list[str], n: int, stride: int = 1) -> list[str]:
+    """The ``n``-token windows of ``toks`` starting at 0, ``stride``,
+    2 * ``stride``, ..., each joined by one space ([] under ``n``
+    tokens). Windows are substrings of the single-space re-join, so
+    they are sliced out by offset instead of re-joined one by one."""
     joined = " ".join(toks)
-    pos = []
-    o = 0
+    pos = [0]
     for t in toks:
-        pos.append(o)
-        o += len(t) + 1
-    pos.append(o)
-    return list(dict.fromkeys(joined[pos[i]:pos[i + n] - 1] for i in range(k)))
+        pos.append(pos[-1] + len(t) + 1)
+    return [
+        joined[pos[p]:pos[p + n] - 1] for p in range(0, len(toks) - n + 1, stride)
+    ]
+
+
+def _shingle_list(toks: list[str], n: int) -> list[str]:
+    """Distinct word ``n``-gram shingles — the Python replica of
+    ``shingles(toks, n)``, in first-occurrence order (= array_distinct's
+    order); [] for docs under ``n`` tokens."""
+    return list(dict.fromkeys(_windows(toks, n)))
+
+
+def _text_kernel(
+    df: DataFrame, text_col: str, keep_cols: list[str],
+    out_fields: list[T.StructField], doc_rows,
+) -> DataFrame:
+    """Run ``doc_rows`` over ``text_col`` in a mapInArrow pass. For one
+    document's text (None for NULL), ``doc_rows`` returns one list per
+    field of ``out_fields``, all of one length: the document's output
+    rows, each carrying the document's ``keep_cols`` values in front.
+    Only (keep_cols, text) crosses the Python boundary (§4.1). Per
+    batch: one ``to_pylist`` (the text), one ``pa.array`` per output
+    column, and one Arrow ``take`` per kept column."""
+    from pyspark.sql.pandas.types import to_arrow_type
+
+    out_schema = T.StructType([df.schema[c] for c in keep_cols] + out_fields)
+    types = [to_arrow_type(f.dataType) for f in out_fields]
+    n_keep = len(keep_cols)
+    names = keep_cols + [f.name for f in out_fields]
+
+    def fn(it):
+        import pyarrow as pa
+
+        for batch in it:
+            src: list[int] = []
+            cols: list[list] = [[] for _ in types]
+            for i, text in enumerate(batch.column(n_keep).to_pylist()):
+                rows = doc_rows(text)
+                if rows[0]:
+                    src.extend([i] * len(rows[0]))
+                    for col, vals in zip(cols, rows):
+                        col.extend(vals)
+            take = pa.array(src, type=pa.int32())
+            yield pa.RecordBatch.from_arrays(
+                [batch.column(j).take(take) for j in range(n_keep)]
+                + [pa.array(c, type=t) for c, t in zip(cols, types)],
+                names=names,
+            )
+
+    return df.select(*keep_cols, text_col).mapInArrow(fn, out_schema)
 
 
 def shingle_rows_arrow(
     df: DataFrame, text_col: str = "text", id_col: str = "doc_id",
     ngram: int = 3, out_col: str = "__sh", extra_cols: tuple = (),
 ) -> DataFrame:
-    """(id, [extra_cols,] shingle array) via a mapInArrow kernel —
+    """(id, [extra_cols,] shingle array) via the Arrow kernel —
     row-identical to ``df.select(id, *extra, shingles(tokens(text_col),
-    ngram))`` (element order included). Only (id, extras, text) crosses
-    the Python boundary (§4.1); ``extra_cols`` pass through untouched."""
-    extras = list(extra_cols)
-    out_schema = T.StructType(
-        [df.schema[id_col]]
-        + [df.schema[c] for c in extras]
-        + [T.StructField(out_col, T.ArrayType(T.StringType()), False)]
+    ngram))`` (element order included; NULL text gives []).
+    ``extra_cols`` pass through untouched."""
+    return _text_kernel(
+        df, text_col, [id_col, *extra_cols],
+        [T.StructField(out_col, T.ArrayType(T.StringType()), False)],
+        lambda text: ([_shingle_list(_tokens(text), ngram)],),
     )
-    n_keep = 1 + len(extras)
-
-    def fn(it):
-        import pyarrow as pa
-
-        for batch in it:
-            shs = [
-                _shingle_list(t, ngram)
-                for t in batch.column(n_keep).to_pylist()
-            ]
-            yield pa.RecordBatch.from_arrays(
-                [batch.column(i) for i in range(n_keep)]
-                + [pa.array(shs, type=pa.list_(pa.string()))],
-                names=[id_col] + extras + [out_col],
-            )
-
-    return df.select(id_col, *extras, text_col).mapInArrow(fn, out_schema)
-
-
-def minhash_band_rows_arrow(
-    df: DataFrame, text_col: str = "text", id_col: str = "doc_id",
-    n_hashes: int = 8, band_size: int = 2, ngram: int = 3,
-) -> DataFrame:
-    """(id, band_idx, band_hash) LSH band rows via a mapInArrow kernel —
-    row-identical to the expression construction in
-    :func:`_minhash_bands_expr` (same seeded md5s, same substring
-    slicing, same band concat), with the per-doc signature computed
-    entirely inside the task: no explode, no groupBy(id) exchange."""
-    out_schema = T.StructType([
-        df.schema[id_col],
-        T.StructField("band_idx", T.IntegerType(), False),
-        T.StructField("band_hash", T.StringType(), False),
-    ])
-    n_seeds = n_hashes // 4
-    n_bands = n_hashes // band_size
-    prefixes = [f"s{m}:" for m in range(n_seeds)]
-
-    def fn(it):
-        import pyarrow as pa
-
-        md5 = hashlib.md5
-        for batch in it:
-            id_type = batch.column(0).type
-            ids = batch.column(0).to_pylist()
-            texts = batch.column(1).to_pylist()
-            out_id: list = []
-            out_bi: list = []
-            out_bh: list = []
-            for did, tx in zip(ids, texts):
-                sh = _shingle_list(tx, ngram)
-                if not sh:
-                    continue
-                mh = []
-                for pre in prefixes:
-                    hs = [md5((pre + g).encode()).hexdigest() for g in sh]
-                    for o in (0, 8, 16, 24):
-                        mh.append(min(h[o:o + 8] for h in hs))
-                for b in range(n_bands):
-                    key = "|".join(mh[b * band_size + j] for j in range(band_size))
-                    out_id.append(did)
-                    out_bi.append(b)
-                    out_bh.append(md5(key.encode()).hexdigest())
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(out_id, type=id_type),
-                 pa.array(out_bi, type=pa.int32()),
-                 pa.array(out_bh, type=pa.string())],
-                names=[id_col, "band_idx", "band_hash"],
-            )
-
-    return df.select(id_col, text_col).mapInArrow(fn, out_schema)
 
 
 def gram_rows_arrow(
@@ -200,50 +177,21 @@ def gram_rows_arrow(
     k-token slice). One md5 per window in C instead of a JVM
     slice+join+md5 per exploded row; this stream is ~1 row per corpus
     token at stride 1 and was the sf10 soak's single largest line item
-    (2155 s in r11's audit)."""
-    out_schema = T.StructType([
-        df.schema[id_col],
-        T.StructField("p", T.IntegerType(), False),
-        T.StructField("gh", T.StringType(), False),
-    ])
+    (2155 s)."""
+    md5 = hashlib.md5
 
-    def fn(it):
-        import pyarrow as pa
+    def grams(text):
+        toks = _tokens(text)
+        return (
+            list(range(0, len(toks) - k + 1, stride)),
+            [md5(w.encode()).hexdigest() for w in _windows(toks, k, stride)],
+        )
 
-        md5 = hashlib.md5
-        for batch in it:
-            id_type = batch.column(0).type
-            ids = batch.column(0).to_pylist()
-            texts = batch.column(1).to_pylist()
-            out_id: list = []
-            out_p: list = []
-            out_gh: list = []
-            for did, tx in zip(ids, texts):
-                toks = _WS_JAVA.split(tx.strip(" ").lower())
-                n = len(toks)
-                if n < k:
-                    continue
-                joined = " ".join(toks)
-                pos = []
-                o = 0
-                for t in toks:
-                    pos.append(o)
-                    o += len(t) + 1
-                pos.append(o)
-                for p in range(0, n - k + 1, stride):
-                    out_id.append(did)
-                    out_p.append(p)
-                    out_gh.append(
-                        md5(joined[pos[p]:pos[p + k] - 1].encode()).hexdigest()
-                    )
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(out_id, type=id_type),
-                 pa.array(out_p, type=pa.int32()),
-                 pa.array(out_gh, type=pa.string())],
-                names=[id_col, "p", "gh"],
-            )
-
-    return df.select(id_col, text_col).mapInArrow(fn, out_schema)
+    return _text_kernel(
+        df, text_col, [id_col],
+        [T.StructField("p", T.IntegerType()), T.StructField("gh", T.StringType())],
+        grams,
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -286,26 +234,6 @@ def drop_exact_dups(
 # ---------------------------------------------------------------------------
 
 
-def minhash_signature(toks: Column, n_hashes: int = 8) -> list[Column]:
-    """k engine-independent min-hashes of a token set: for seed i, the
-    minimum md5 of ``'s{i}:' || token``. Each column is a 32-hex-char
-    string; the min over tokens estimates set similarity the usual
-    MinHash way.
-
-    NOTE: the per-seed lambda MUST take exactly one parameter — a
-    two-parameter lambda passed to ``F.transform`` receives
-    (element, index) and would silently clobber the seed binding.
-    """
-
-    def one_hash(i: int) -> Column:
-        prefix = F.lit(f"s{i}:")
-        return F.array_min(
-            F.transform(toks, lambda t: F.md5(F.concat(prefix, t)))
-        ).alias(f"mh{i}")
-
-    return [one_hash(i) for i in range(n_hashes)]
-
-
 def minhash_bands(
     df: DataFrame, text_col: str = "text", id_col: str = "doc_id",
     n_hashes: int = 8, band_size: int = 2, ngram: int = 3,
@@ -314,77 +242,45 @@ def minhash_bands(
     signature over ``ngram``-shingle sets (``ngram=1`` => token sets).
     Docs sharing a (band_idx, band_hash) are near-dup candidates.
     n_hashes/band_size bands; smaller bands => higher recall, more
-    candidates.
+    candidates. Signature component ``4m + j`` is the min over the
+    doc's shingles of hex chars ``8j..8j+7`` of ``md5('s{m}:' ||
+    shingle)``: one md5 yields four independent 32-bit components, so
+    n_hashes/4 seeded md5s cover the signature. Band ``b`` is the md5
+    of its ``band_size`` components joined by '|'. Docs without a
+    shingle (NULL text, fewer than ``ngram`` tokens) emit no rows.
 
-    Physical shape (r14): one mapInArrow pass computes each document's
-    whole signature + band rows inside the task
-    (:func:`minhash_band_rows_arrow`) — no explode, no groupBy(id)
-    exchange, and the md5s run in C (hashlib) instead of per-row JVM
-    expressions. Row-identical to the expression construction
-    (:func:`_minhash_bands_expr`, kept as the equivalence baseline);
-    measured 3.2x at sf3 with one fewer exchange. ``ngram=1`` (token
-    sets, no shingling) keeps the expression path — no caller profile
-    showed it hot.
+    Physical shape: one Arrow kernel pass computes each document's
+    whole signature + band rows inside the task — no explode, no
+    groupBy(id) exchange, and the md5s run in C (hashlib) instead of
+    per-row JVM expressions. Row-identical to the expression
+    construction kept as the oracle in tests/test_arrow_kernels.py;
+    measured 3.2x at sf3 with one fewer exchange.
     """
     if n_hashes % 4 != 0:
         raise ValueError("n_hashes must be a multiple of 4 (md5 slicing)")
-    if ngram > 1:
-        return minhash_band_rows_arrow(
-            df, text_col, id_col, n_hashes, band_size, ngram
-        )
-    return _minhash_bands_expr(df, text_col, id_col, n_hashes, band_size, ngram)
+    prefixes = [f"s{m}:" for m in range(n_hashes // 4)]
+    band_idx = list(range(n_hashes // band_size))
+    md5 = hashlib.md5
 
-
-def _minhash_bands_expr(
-    df: DataFrame, text_col: str = "text", id_col: str = "doc_id",
-    n_hashes: int = 8, band_size: int = 2, ngram: int = 3,
-) -> DataFrame:
-    """Expression-tier band construction (pre-r14 shape): explode
-    shingles ONCE, hash each shingle k times, then a single hash
-    aggregate of k MINs per doc. Kept as the row-equivalence baseline
-    for the Arrow kernel (tests/test_arrow_kernels.py) and as the
-    ``ngram=1`` path."""
-    toks = (
-        shingles(tokens(text_col), ngram)
-        if ngram > 1
-        else F.array_distinct(tokens(text_col))
-    )
-    if n_hashes % 4 != 0:
-        raise ValueError("n_hashes must be a multiple of 4 (md5 slicing)")
-    exploded = df.select(F.col(id_col), F.explode(toks).alias("__g"))
-    # One md5 yields four independent 32-bit (8-hex-char) min-hash
-    # components; n_hashes/4 seeded md5s cover the signature with 4x
-    # less hashing than one md5 per component.
-    slices = []
-    for m in range(n_hashes // 4):
-        h = F.md5(F.concat(F.lit(f"s{m}:"), F.col("__g")))
-        slices.extend(
-            F.substring(h, 1 + 8 * j, 8).alias(f"h{m * 4 + j}") for j in range(4)
-        )
-    hashed = exploded.select(F.col(id_col), *slices)
-    base = hashed.groupBy(id_col).agg(
-        *[F.min(f"h{i}").alias(f"mh{i}") for i in range(n_hashes)]
-    )
-    n_bands = n_hashes // band_size
-    bands = F.array(
-        *[
-            F.struct(
-                F.lit(b).alias("band_idx"),
-                F.md5(
-                    F.concat_ws(
-                        "|",
-                        *[F.col(f"mh{b * band_size + j}") for j in range(band_size)],
-                    )
-                ).alias("band_hash"),
-            )
-            for b in range(n_bands)
+    def bands(text):
+        sh = _shingle_list(_tokens(text), ngram)
+        if not sh:
+            return [], []
+        mh = []
+        for pre in prefixes:
+            hs = [md5((pre + g).encode()).hexdigest() for g in sh]
+            for o in (0, 8, 16, 24):
+                mh.append(min(h[o:o + 8] for h in hs))
+        return band_idx, [
+            md5("|".join(mh[b * band_size:(b + 1) * band_size]).encode()).hexdigest()
+            for b in band_idx
         ]
-    )
-    exploded = base.select(F.col(id_col), F.explode(bands).alias("band"))
-    return exploded.select(
-        id_col,
-        F.col("band.band_idx").alias("band_idx"),
-        F.col("band.band_hash").alias("band_hash"),
+
+    return _text_kernel(
+        df, text_col, [id_col],
+        [T.StructField("band_idx", T.IntegerType(), False),
+         T.StructField("band_hash", T.StringType(), False)],
+        bands,
     )
 
 
@@ -667,8 +563,7 @@ def ngram_jaccard_pairs_prefix(
     are the norm for web corpora.
     """
     blk = [F.col(block_col)] if block_col else []
-    # r14: shingle sets from the Arrow kernel (kernel output is already
-    # distinct, so the old array_distinct wrapper is implied)
+    # shingle sets from the Arrow kernel (already distinct)
     sh0 = shingle_rows_arrow(
         df, text_col, id_col, n, out_col="sh",
         extra_cols=tuple([block_col] if block_col else []),
@@ -778,8 +673,6 @@ def ngram_jaccard_pairs_prefix(
 # SimHash
 # ---------------------------------------------------------------------------
 
-_HEX = "0123456789abcdef"
-
 
 def simhash16(
     df: DataFrame, text_col: str = "text", id_col: str = "doc_id"
@@ -788,68 +681,34 @@ def simhash16(
 
     bit b of a token = bit (b % 4) of the hex nibble at position b // 4
     of its md5; the document bit is the sign of the sum of (2*bit - 1)
-    over tokens. Computed per document inside an Arrow kernel (r14) —
-    no explode, no groupBy(id) shuffle, md5 in C — row-identical to the
-    expression construction (:func:`_simhash16_expr`, the equivalence
-    baseline tests compare against); the same formula stays expressible
-    in ANSI SQL for the oracle.
+    over tokens (a zero sum sets the bit). Computed per document inside
+    an Arrow kernel — no explode, no groupBy(id) shuffle, md5 in C —
+    row-identical to the expression construction kept as the oracle in
+    tests/test_arrow_kernels.py; the same formula stays expressible in
+    ANSI SQL for the DuckDB oracle. NULL text emits no row; "" is one
+    empty token and does.
     """
-    out_schema = T.StructType([
-        df.schema[id_col],
-        T.StructField("simhash", T.IntegerType(), False),
-    ])
 
-    def fn(it):
-        import pyarrow as pa
+    md5 = hashlib.md5
 
-        md5 = hashlib.md5
-        for batch in it:
-            id_type = batch.column(0).type
-            ids = batch.column(0).to_pylist()
-            texts = batch.column(1).to_pylist()
-            out = []
-            for tx in texts:
-                # NOTE: split of "" is [""] — the empty string IS a
-                # token row in the expression form, so no doc is skipped
-                toks = set(_WS_JAVA.split(tx.strip(" ").lower()))
-                sums = [0] * 16
-                for t in toks:
-                    # first 4 hex nibbles of the md5 carry the 16 bits:
-                    # bit b = bit (b % 4) of nibble b // 4
-                    n0 = int(md5(t.encode()).hexdigest()[:4], 16)
-                    for b in range(16):
-                        bit = (n0 >> (12 - 4 * (b >> 2) + (b & 3))) & 1
-                        sums[b] += 2 * bit - 1
-                out.append(sum(1 << b for b in range(16) if sums[b] >= 0))
-            yield pa.RecordBatch.from_arrays(
-                [batch.column(0), pa.array(out, type=pa.int32())],
-                names=[id_col, "simhash"],
-            )
+    def simhash(text):
+        toks = set(_tokens(text))
+        if not toks:
+            return ([],)
+        sums = [0] * 16
+        for t in toks:
+            # first 4 hex nibbles of the md5 carry the 16 bits:
+            # bit b = bit (b % 4) of nibble b // 4
+            n0 = int(md5(t.encode()).hexdigest()[:4], 16)
+            for b in range(16):
+                bit = (n0 >> (12 - 4 * (b >> 2) + (b & 3))) & 1
+                sums[b] += 2 * bit - 1
+        return ([sum(1 << b for b in range(16) if sums[b] >= 0)],)
 
-    return df.select(id_col, text_col).mapInArrow(fn, out_schema)
-
-
-def _simhash16_expr(
-    df: DataFrame, text_col: str = "text", id_col: str = "doc_id"
-) -> DataFrame:
-    """Expression-tier SimHash (pre-r14 shape): explode -> 16
-    conditional sums -> repack, one shuffle on the id. Kept as the
-    row-equivalence baseline for the Arrow kernel."""
-    tok = df.select(
-        F.col(id_col), F.explode(F.array_distinct(tokens(text_col))).alias("tok")
+    return _text_kernel(
+        df, text_col, [id_col],
+        [T.StructField("simhash", T.IntegerType(), False)], simhash,
     )
-    h = F.md5(F.col("tok"))
-    bit_sums = []
-    for b in range(16):
-        nib = F.conv(F.substring(h, 1 + b // 4, 1), 16, 10).cast("int")
-        bit = F.shiftright(nib, b % 4).bitwiseAND(F.lit(1))
-        bit_sums.append(F.sum(bit * 2 - 1).alias(f"s{b}"))
-    sums = tok.groupBy(id_col).agg(*bit_sums)
-    packed = None
-    for b in range(16):
-        term = F.when(F.col(f"s{b}") >= 0, F.lit(1 << b)).otherwise(F.lit(0))
-        packed = term if packed is None else packed + term
-    return sums.select(F.col(id_col), packed.cast("int").alias("simhash"))
 
 
 # ---------------------------------------------------------------------------
@@ -1082,10 +941,9 @@ def exact_substring_coverage(
     Both engines group by md5 of the SAME gram string, so even a
     (cryptographically negligible) collision is engine-symmetric.
 
-    ``stride`` is the 100 TB throughput knob (r11, VERDICT r10 panel
-    audit: the stride-1 window stream is ~1 row per corpus token —
-    2155 s of the sf10 soak — which is the EXACT tier's intrinsic
-    cost). ``stride = s > 1`` samples window starts at multiples of
+    ``stride`` is the 100 TB throughput knob (the stride-1 window
+    stream is ~1 row per corpus token — 2155 s of the sf10 soak —
+    which is the EXACT tier's intrinsic cost). ``stride = s > 1`` samples window starts at multiples of
     ``s``, cutting the stream, the gram aggregate, and the semi-join
     ~s-fold. The trade is recall, and it is phase-sensitive: a sampled
     window flagged duplicated is always genuinely duplicated (sampled
@@ -1105,11 +963,11 @@ def exact_substring_coverage(
     t = df.select(F.col(id_col), tokens(text_col).alias("toks")).withColumn(
         "n", F.size("toks")
     )
-    # r14: the window stream comes from the Arrow gram kernel — same
-    # (id, p, md5) rows as the old explode(sequence) + slice + join +
-    # md5 expression chain (pinned by tests/test_arrow_kernels.py),
-    # with the per-window md5 in C. `t` stays the n_tokens source for
-    # the final left join (it covers docs below k tokens too).
+    # The window stream comes from the Arrow gram kernel — the same
+    # (id, p, md5) rows as the explode(sequence) + slice + join + md5
+    # expression chain (pinned by tests/test_arrow_kernels.py), with
+    # the per-window md5 in C. `t` stays the n_tokens source for the
+    # final left join (it covers docs below k tokens too).
     grams = gram_rows_arrow(df, text_col, id_col, k, stride)
     dup = (
         grams.groupBy("gh")

@@ -19,16 +19,6 @@ from pyspark.sql import functions as F
 # ---------------------------------------------------------------------------
 
 
-def cast_nullsafe(df: DataFrame, col: str, dtype: str) -> DataFrame:
-    """Cast with null-on-error (SURVEY §2-B2).
-
-    Mirrors ``pd.to_numeric(col, errors='coerce')`` (reference
-    ``cms_preprocess.py:72``): invalid values become null (engine runs
-    with ``spark.sql.ansi.enabled=false``, so ``cast`` is try-cast).
-    """
-    return df.withColumn(col, F.col(col).cast(dtype))
-
-
 def drop_null(df: DataFrame, cols: Sequence[str]) -> DataFrame:
     """Null-drop filter (SURVEY §2-B3; reference ``cms_preprocess.py:75``)."""
     return df.na.drop(subset=list(cols))
@@ -247,26 +237,6 @@ def group_max(df: DataFrame, keys: Sequence[str], cols: Sequence[str]) -> DataFr
     return df.groupBy(*keys).agg(*[F.max(c).alias(c) for c in cols])
 
 
-def full_period_coverage_keys(
-    df: DataFrame, key: str, period_col: str, periods: Sequence
-) -> DataFrame:
-    """Keys having at least one row in EVERY period (SURVEY §2-D2;
-    reference ``set(x) >= {2008..2010}``, ``cms_preprocess.py:92-93``).
-
-    One hash aggregate: count distinct periods restricted to the window,
-    keep keys where it equals ``len(periods)``. Scales as a single
-    shuffle on ``key``; no window function, no collect.
-    """
-    lo, hi = min(periods), max(periods)
-    in_window = F.when(F.col(period_col).between(lo, hi), F.col(period_col))
-    return (
-        df.groupBy(key)
-        .agg(F.countDistinct(in_window).alias("__n"))
-        .filter(F.col("__n") == len(set(periods)))
-        .select(key)
-    )
-
-
 def full_enrollment_filter(
     df: DataFrame, key: str, period_col: str, periods: Sequence
 ) -> DataFrame:
@@ -336,12 +306,6 @@ def top_k_per_group(
     return df.withColumn(rank_col, F.row_number().over(w)).filter(
         F.col(rank_col) <= k
     )
-
-
-def shuffle_rows(df: DataFrame, seed: int = 42) -> DataFrame:
-    """Seeded random shuffle (SURVEY §2-E6; reference ``sample(frac=1)``,
-    ``cms_preprocess.py:317``)."""
-    return df.orderBy(F.rand(seed))
 
 
 # ---------------------------------------------------------------------------

@@ -1530,22 +1530,26 @@ def pq_train_codebooks(
     are estimated, not aggregated), while ENCODE and SERVE below
     stream the full corpus map-only.
 
-    r14 driver cutover (same precedent as clustering.lloyd_centroids):
-    at or below ``driver_cutover_rows`` the fused iteration runs on the
-    driver in numpy int64 — the distributed fit's per-iteration cost at
-    small n is Catalyst compiling the n_subspaces x n_centroids x
-    (sub+1) aggregate tree (~1150 expressions at the 8x16 default;
-    measured 37 s for 500 vectors, ~7 s/job of pure planning+codegen),
-    not the data. Identical arithmetic (exact int distances, argmin =
-    lowest code on ties, the same ``half_up`` update, emptied clusters
-    carry over), pinned by a loop ≡ cutover test. Pass 0 to force the
-    distributed fit.
+    Driver cutover (same precedent as clustering.lloyd_centroids): at
+    or below ``driver_cutover_rows`` each subspace is fitted on the
+    driver by ``clustering._driver_lloyd`` — the distributed fit's
+    per-iteration cost at small n is Catalyst compiling the
+    n_subspaces x n_centroids x (sub+1) aggregate tree (~1150
+    expressions at the 8x16 default; measured 37 s for 500 vectors,
+    ~7 s/job of pure planning+codegen), not the data. Identical
+    arithmetic (exact int distances, argmin = lowest code on ties, the
+    same ``_half_up`` update, emptied clusters carry over), pinned by
+    tests/test_clustering.py's loop ≡ cutover test. Pass 0 to force
+    the distributed fit.
     """
-    import math
     import operator as _op
     from functools import reduce as _reduce
 
-    from orx_surgical_spark.operators.clustering import MICRO
+    from orx_surgical_spark.operators.clustering import (
+        MICRO,
+        _driver_lloyd,
+        _half_up,
+    )
 
     first = corpus.select(F.col(vec_col)).first()
     if first is None:
@@ -1578,33 +1582,10 @@ def pq_train_codebooks(
             )
         ids = np.array([r["vec_id"] for r in rows], dtype=np.int64)
         X = np.array([r["xm"] for r in rows], dtype=np.int64)
-
-        def hup(x: float) -> int:
-            return (
-                int(math.floor(x + 0.5))
-                if x >= 0
-                else -int(math.floor(-x + 0.5))
-            )
-
-        order = np.argsort(ids, kind="stable")[:n_centroids]
-        out = []
-        for m in range(n_subspaces):
-            Xm = X[:, m * sub:(m + 1) * sub]
-            C = Xm[order].copy()
-            for _ in range(iters):
-                d = Xm[:, None, :] - C[None, :, :]
-                np.square(d, out=d)
-                assign = d.sum(axis=2).argmin(axis=1)  # ties -> lowest code
-                counts = np.bincount(assign, minlength=n_centroids)
-                sums = np.zeros((n_centroids, sub), dtype=np.int64)
-                np.add.at(sums, assign, Xm)
-                for j in range(n_centroids):
-                    if counts[j]:  # emptied cluster keeps its centroid
-                        C[j] = [
-                            hup(float(s) / float(counts[j])) for s in sums[j]
-                        ]
-            out.append([[int(v) for v in c] for c in C])
-        return out
+        return [
+            _driver_lloyd(X[:, m * sub:(m + 1) * sub], ids, n_centroids, iters)
+            for m in range(n_subspaces)
+        ]
     init_rows = xm_df.orderBy("vec_id").limit(n_centroids).collect()
     if len(init_rows) < n_centroids:
         raise ValueError(
@@ -1633,11 +1614,6 @@ def pq_train_codebooks(
             )
         return F.array_min(F.array(*cands))["j"]
 
-    def half_up(x: float) -> int:
-        # Spark F.round HALF_UP on doubles (the clustering module's
-        # update rule): round half away from zero.
-        return int(math.floor(x + 0.5)) if x >= 0 else -int(math.floor(-x + 0.5))
-
     for _ in range(iters):
         assigned = xm_df.select(
             "xm", *[cid_expr(m).alias(f"c{m}") for m in range(n_subspaces)]
@@ -1661,7 +1637,7 @@ def pq_train_codebooks(
                 cnt = row[f"n_{m}_{j}"]
                 if cnt:  # emptied cluster keeps its previous centroid
                     codebooks[m][j] = [
-                        half_up(row[f"s_{m}_{j}_{i}"] / cnt)
+                        _half_up(row[f"s_{m}_{j}_{i}"] / cnt)
                         for i in range(sub)
                     ]
     return codebooks

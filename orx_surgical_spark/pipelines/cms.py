@@ -188,15 +188,6 @@ def remap_and_label(
 # ---------------------------------------------------------------------------
 
 
-def _melted_codes(df: DataFrame, cols: list[str], kind: str) -> DataFrame:
-    """(claim, kind, ccs) rows from the wide remapped code columns;
-    ccs=0 (unknown) dropped — the reference vocabulary has no 0."""
-    stacked = F.explode(F.array(*[F.col(c) for c in cols])).alias("ccs")
-    return df.select("CLM_ID", F.lit(kind).alias("kind"), stacked).filter(
-        F.col("ccs") != 0
-    )
-
-
 def occurrence_columns(
     df: DataFrame, dx_vocab: list[int], pcs_vocab: list[int]
 ) -> DataFrame:

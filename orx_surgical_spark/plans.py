@@ -27,17 +27,6 @@ def executed_plan_str(df: DataFrame) -> str:
     return df._jdf.queryExecution().executedPlan().toString()
 
 
-def scan_read_schemas(df: DataFrame) -> list[str]:
-    """The ReadSchema line of every file scan in the plan — what the
-    engine will actually read off disk (column pruning check)."""
-    return [l.strip() for l in plan_str(df).splitlines() if "ReadSchema" in l]
-
-
-def pushed_filters(df: DataFrame) -> list[str]:
-    """The PushedFilters line of every file scan (pushdown check)."""
-    return [l.strip() for l in plan_str(df).splitlines() if "PushedFilters" in l]
-
-
 def count_exchanges(df: DataFrame) -> int:
     """Number of Exchange (shuffle/broadcast) operators in the plan —
     the first thing to minimize when a query is slow at scale."""
@@ -46,7 +35,3 @@ def count_exchanges(df: DataFrame) -> int:
         for l in plan_str(df, "simple").splitlines()
         if l.lstrip().startswith(("+- Exchange", ":- Exchange", "Exchange"))
     )
-
-
-def uses_broadcast_join(df: DataFrame) -> bool:
-    return "BroadcastHashJoin" in plan_str(df, "simple")

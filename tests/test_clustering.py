@@ -9,6 +9,7 @@ import numpy as np
 
 from orx_surgical_spark.operators.clustering import (
     MICRO,
+    _half_up,
     kmeans_lloyd,
     lloyd_centroids,
 )
@@ -132,3 +133,67 @@ def test_kmeans_rejects_empty_corpus(spark):
     empty = spark.createDataFrame([], "vec_id long, embedding array<float>")
     with pytest.raises(ValueError, match="empty"):
         kmeans_lloyd(empty, k=2, iters=1)
+
+
+# Points in micro-units. Vectors 0 and 1 are identical, so the init
+# puts centroids 0 and 1 on the same point: every distance to cluster 1
+# ties with cluster 0, the tie goes to the lower id, and cluster 1
+# empties in the first round. Vector 3 is equidistant from vectors 0
+# and 2 (another tie), and the odd coordinates give half-unit means on
+# both signs, so the HALF_UP update is exercised too.
+_TIE_2D = [
+    (1000001, 2000001), (1000001, 2000001), (3000001, 2000001),
+    (2000001, 2000001), (4000000, 3000001), (-1, 4000000),
+    (3000000, 4000003), (1000000, 5000000), (5000001, 2000000),
+    (2000000, 3000000), (-1000001, 1000000), (-2000000, -5000001),
+]
+
+
+def _tie_df(spark, halves):
+    """12 vectors of ``2 * halves`` dims; every half is a rotation of
+    ``_TIE_2D`` that keeps vectors 0 and 1 identical."""
+    rows = [
+        (i, [v / MICRO for h in range(halves) for v in _TIE_2D[(i + 5 * h) % 12]])
+        for i in range(12)
+    ]
+    rows[1] = (1, rows[0][1])
+    return spark.createDataFrame(rows, "vec_id long, embedding array<double>")
+
+
+def test_lloyd_loop_matches_driver_cutover(spark):
+    """The distributed loop (cutover forced off) and the driver numpy
+    Lloyd return the same centroids, emptied cluster included."""
+    df = _tie_df(spark, 1)
+    for iters in (1, 3):
+        _, loop = lloyd_centroids(df, k=3, iters=iters, driver_cutover_rows=0)
+        _, cut = lloyd_centroids(df, k=3, iters=iters)
+        assert loop == cut
+    _, one = lloyd_centroids(df, k=3, iters=1)
+    assert one[1] == list(_TIE_2D[0])  # cluster 1 emptied and kept its centroid
+
+
+def test_pq_fit_loop_matches_driver_cutover(spark):
+    """Same pin for the PQ codebook fit: the fused distributed fit and
+    the per-subspace driver Lloyd agree on every codebook."""
+    from orx_surgical_spark.operators.similarity import pq_train_codebooks
+
+    df = _tie_df(spark, 2)
+    kw = dict(n_subspaces=2, n_centroids=3, iters=2)
+    loop = pq_train_codebooks(df, driver_cutover_rows=0, **kw)
+    cut = pq_train_codebooks(df, **kw)
+    assert loop == cut
+
+
+def test_half_up_matches_spark_round(spark):
+    """The driver-side update rounds like Spark's ``F.round(double)``:
+    half away from zero on the decimal repr (``floor(x + 0.5)`` gives 1
+    for 0.49999999999999994)."""
+    from pyspark.sql import functions as F
+
+    xs = [0.49999999999999994, 0.5, -0.5, 2.5, -2.5, -1.5, 1.4999999999999998]
+    want = [0, 1, -1, 3, -3, -2, 1]
+    assert [_half_up(x) for x in xs] == want
+    got = spark.createDataFrame([(x,) for x in xs], "x double").select(
+        F.round("x").cast("long")
+    )
+    assert [r[0] for r in got.collect()] == want
