@@ -144,6 +144,31 @@ def git_dirty_engine() -> bool | None:
         return None
 
 
+def lap_stats(times: list[float]) -> tuple[float, float, float]:
+    """(best, (median - best) / best, (worst - best) / best) of a lap."""
+    best = min(times)
+    med = sorted(times)[len(times) // 2]
+    spread = (med - best) / best if best > 0 else 0.0
+    wr = (max(times) - best) / best if best > 0 else 0.0
+    return best, spread, wr
+
+
+def retry_offenders(
+    all_times: dict[str, list[float]],
+    spread_threshold_pct: float,
+    excluded: set[str],
+) -> list[str]:
+    """Queries the next quiet-retry round re-laps: those whose accepted
+    lap spreads past the gate, minus ``excluded`` — queries that failed,
+    or that errored in an earlier retry round (they keep their first-lap
+    timings, so re-lapping them would repeat the error in every round)."""
+    return [
+        n
+        for n, ts in all_times.items()
+        if ts and n not in excluded and lap_stats(ts)[1] * 100 > spread_threshold_pct
+    ]
+
+
 def main() -> None:
     # --isolate q1,q2 (VERDICT r12 item 5): time ONLY the named
     # queries, each consecutively best-of-N on a quiet box — the
@@ -278,13 +303,6 @@ def main() -> None:
                 lap[name].append(time.perf_counter() - t0)
         return lap
 
-    def lap_stats(times: list[float]) -> tuple[float, float, float]:
-        best = min(times)
-        med = sorted(times)[len(times) // 2]
-        spread = (med - best) / best if best > 0 else 0.0
-        wr = (max(times) - best) / best if best > 0 else 0.0
-        return best, spread, wr
-
     t_all = time.perf_counter()
     if isolate:
         # Consecutive per-query laps: isolation evidence certifies each
@@ -317,11 +335,9 @@ def main() -> None:
     retry_errors: dict[str, str] = {}
     rounds_used = 0
     for _round in range(retry_rounds):
-        offenders = [
-            n
-            for n, ts in all_times.items()
-            if ts and n not in failures and lap_stats(ts)[1] * 100 > spread_threshold
-        ]
+        offenders = retry_offenders(
+            all_times, spread_threshold, set(failures) | set(retry_errors)
+        )
         if not offenders:
             break
         rounds_used += 1

@@ -25,6 +25,7 @@ from __future__ import annotations
 import hashlib
 import re
 
+from py4j.protocol import Py4JError
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -83,6 +84,12 @@ def _broadcast_threshold_bytes(spark) -> int:
         )
     except Exception:
         return 10 * 1024 * 1024
+
+
+def _plan_size_bytes(df: DataFrame) -> int:
+    """Catalyst's size estimate of ``df``'s optimized plan — a private
+    API read; callers fall back to no strategy hint when it raises."""
+    return int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
 
 
 def _tokens(text: str | None) -> list[str]:
@@ -467,11 +474,14 @@ def jaccard_verify(
     # probed SF including the green sf10 soak, SMJ above. An A/B at sf3
     # (r14) confirmed the decision empirically: verify stage best-of-4
     # 12.8 s hinted vs 14.4-16.9 s sort-merge, with ~3x tighter spread.
+    # If the private stats read fails (a Spark upgrade), no hint is
+    # applied and the planner picks the join from the checkpoint's own
+    # stats (sort-merge when unknown): same rows, lost hint.
     sh = shingle_rows_arrow(cand_docs, text_col, id_col, ngram)
-    sh_est_bytes = int(
-        cand_docs.select(F.col(id_col), F.col(text_col))
-        ._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
-    )
+    try:
+        sh_est_bytes = _plan_size_bytes(cand_docs.select(id_col, text_col))
+    except (Py4JError, AttributeError, TypeError, ValueError):
+        sh_est_bytes = 0
     bcast_thr = _broadcast_threshold_bytes(docs.sparkSession)
     sh = sh.localCheckpoint(eager=False, storageLevel=StorageLevel.DISK_ONLY)
     a = sh.select(F.col(id_col).alias("id_a"), F.col("__sh").alias("__sh_a"))

@@ -2,9 +2,10 @@
 (``get_aov``, ``get_mhe``; ``cms_preprocess.py:346-397``) as one lazy
 DataFrame plan each.
 
-Every stage composes the operator library and stays JVM-side; the plan
-is a single Spark job until an action fires (the reference executes
-eagerly stage by stage, SURVEY §3).  Differences by design (SURVEY §7):
+Every stage composes the operator library and stays JVM-side; the only
+jobs at construction are one collect per cleaned crosswalk, and the rest
+is lazy until an action fires (the reference executes eagerly stage by
+stage, SURVEY §3).  Differences by design (SURVEY §7):
 
 - **E3 pivot, not positional flatten** — the reference flattens each
   patient's yearly rows in groups of 3 *by position*
@@ -23,7 +24,7 @@ eagerly stage by stage, SURVEY §3).  Differences by design (SURVEY §7):
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Row, SparkSession
 from pyspark.sql import functions as F
 
 from orx_surgical_spark import schemas as S
@@ -118,9 +119,13 @@ def clean_crosswalk(raw: DataFrame) -> DataFrame:
 
 
 def crosswalk_vocab(xwalk: DataFrame) -> list[int]:
-    """D3: the sorted distinct CCS vocabulary (collected to size the
-    encoders, like ``CountVectorizer.vocabulary``)."""
-    return [r[0] for r in xwalk.select("CCS").distinct().orderBy("CCS").collect()]
+    """D3: the sorted distinct CCS vocabulary (sizes the encoders, like
+    ``CountVectorizer.vocabulary``).  One collect of the crosswalk."""
+    return _vocab(xwalk.collect())
+
+
+def _vocab(rows: list[Row]) -> list[int]:
+    return sorted({r["CCS"] for r in rows})
 
 
 # ---------------------------------------------------------------------------
@@ -138,32 +143,39 @@ def remap_and_label(
     """C3/B14 dict-remap of the 16 wide code columns (unknown -> 0) +
     B15 label.
 
-    ICD-9 CCS crosswalks are crosswalk-sized (hundreds of rows), so by
-    default they ship as broadcast map literals — the per-column probe
-    is a pure projection, no joins, no shuffle (the reference's
-    ``applymap`` dict probe with the same semantics,
-    ``cms_preprocess.py:192,195``).  Above ``map_literal_max`` rows
-    (think ICD-10, ~70k codes) a map literal would paste a multi-MB
-    Catalyst expression into each of the 16 columns (plan-compile
-    blowup), so the remap switches to one broadcast hash join per code
-    column: the crosswalk hash table broadcasts ONCE and is probed 16
-    times (identical BroadcastExchanges are reused).
+    Each crosswalk is collected once.  Up to ``map_literal_max`` rows
+    (ICD-9 CCS: hundreds) it ships as a map literal, and the remaps plus
+    the label are ONE ``withColumns`` projection: no joins, no shuffle
+    (the reference's ``applymap`` dict probe,
+    ``cms_preprocess.py:192,195``).  Above it (think ICD-10, ~70k codes)
+    a map literal would paste a multi-MB Catalyst expression into every
+    column, so that crosswalk's columns take one broadcast hash join
+    each; the hash table broadcasts ONCE (identical exchanges reused).
+    Perfbench ``cms.remap.jobs`` at seed 7: 2, against 10 with a
+    ``count()`` and a ``collect()`` per crosswalk.
     """
+    return _remap_and_label(claims, [
+        (dx_xwalk, dx_xwalk.collect(), S.DGNS_COLS),
+        (pcs_xwalk, pcs_xwalk.collect(), S.PRCDR_COLS),
+    ], surgery_drgs, map_literal_max)
 
-    def map_lit(xwalk: DataFrame):
-        rows = xwalk.collect()
-        return F.create_map(
-            *[x for r in rows for x in (F.lit(r["ICD9"]), F.lit(r["CCS"]))]
-        )
 
-    def remap(out: DataFrame, xwalk: DataFrame, cols: list[str]) -> DataFrame:
-        if xwalk.count() <= map_literal_max:
-            m = map_lit(xwalk)
+def _remap_and_label(
+    claims: DataFrame,
+    xwalks: list[tuple[DataFrame, list[Row], list[str]]],
+    surgery_drgs: tuple[str, ...] = SURGERY_DRGS,
+    map_literal_max: int = 1000,
+) -> DataFrame:
+    """:func:`remap_and_label` on collected ``(frame, rows, columns)``."""
+    out, exprs = claims, {}
+    for xwalk, rows, cols in xwalks:
+        if len(rows) <= map_literal_max:
+            m = F.create_map(
+                *[F.lit(x) for r in rows for x in (r["ICD9"], r["CCS"])]
+            )
             for c in cols:
-                out = out.withColumn(
-                    c, F.coalesce(F.element_at(m, F.col(c)), F.lit(0))
-                )
-            return out
+                exprs[c] = F.coalesce(F.element_at(m, F.col(c)), F.lit(0))
+            continue
         lut = F.broadcast(
             xwalk.select(F.col("ICD9").alias("__k"), F.col("CCS").alias("__v"))
         )
@@ -173,13 +185,8 @@ def remap_and_label(
                 .withColumn(c, F.coalesce("__v", F.lit(0)))
                 .drop("__k", "__v")
             )
-        return out
-
-    out = remap(claims, dx_xwalk, S.DGNS_COLS)
-    out = remap(out, pcs_xwalk, S.PRCDR_COLS)
-    return out.withColumn(
-        "label", R.derive_binary_label("CLM_DRG_CD", list(surgery_drgs))
-    )
+    exprs["label"] = R.derive_binary_label("CLM_DRG_CD", list(surgery_drgs))
+    return out.withColumns(exprs)
 
 
 # ---------------------------------------------------------------------------
@@ -226,38 +233,32 @@ def aov_features(
     years: tuple[int, ...] = (2008, 2009, 2010),
     leak_label: bool = False,
 ) -> DataFrame:
-    """D1 group-max per patient-year, then an explicit Year pivot.
-
-    Output: one row per patient with ``y<year>_<col>`` blocks for
-    [Age, sex, codes] x len(years) and ``label`` = the final year's
-    label.  ``leak_label=True`` additionally keeps the per-year label
-    columns among the features — reproducing the reference's leakage
-    (SURVEY §2-E3) for parity studies only.
+    """D1 group-max per patient-year, years laid out explicitly: one row
+    per patient, ``y<year>_<col>`` = max ``col`` over its rows in that
+    year for [Age, sex, codes] x len(years), ``label`` = max label over
+    its final-year rows.  Kept iff it has a final-year row (even with a
+    NULL label); NULLs and missing years fill with 0.  ``leak_label=True``
+    also keeps the per-year labels as features — the reference's leakage
+    (SURVEY §2-E3), for parity studies only.  ONE aggregate per patient
+    (perfbench ``cms.aov``, seed 7, vocab 8 + 4: construction 0.96 ->
+    0.51 s, 12 -> 10 jobs against group + pivot + rename + self-join).
     """
     code_cols = [f"dx_ccs_{v}" for v in dx_vocab] + [
         f"pcs_ccs_{v}" for v in pcs_vocab
     ]
-    per_year = encoded.groupBy("DESYNPUF_ID", "Year").agg(  # D1
-        F.max("Age").alias("Age"),
-        F.max("BENE_SEX_IDENT_CD").alias("sex"),
-        *[F.max(c).alias(c) for c in code_cols],
-        F.max("label").alias("label"),
+    values = {"Age": "Age", "sex": "BENE_SEX_IDENT_CD"}
+    values.update({c: c for c in code_cols + ["label"] * leak_label})
+    final = F.col("Year") == years[-1]
+    per_year = [
+        F.max(F.when(F.col("Year") == y, F.col(c))).alias(f"y{y}_{name}")
+        for y in years for name, c in values.items()
+    ]
+    return (
+        encoded.groupBy("DESYNPUF_ID")
+        .agg(*per_year, F.max(F.when(final, F.col("label"))).alias("label"),
+             F.bool_or(final).alias("__final"))
+        .filter("__final").drop("__final").na.fill(0)
     )
-    value_cols = ["Age", "sex", *code_cols] + (["label"] if leak_label else [])
-    pivoted = (
-        per_year.groupBy("DESYNPUF_ID")
-        .pivot("Year", list(years))
-        .agg(*[F.first(c).alias(c) for c in value_cols])
-    )
-    # Spark names pivoted columns "<year>_<col>"; prefix with y for
-    # valid identifiers everywhere.
-    renames = {f"{y}_{c}": f"y{y}_{c}" for y in years for c in value_cols}
-    for old, new in renames.items():
-        pivoted = pivoted.withColumnRenamed(old, new)
-    y = per_year.filter(F.col("Year") == years[-1]).select(
-        "DESYNPUF_ID", F.col("label").alias("label")
-    )
-    return pivoted.join(y, on="DESYNPUF_ID").na.fill(0)
 
 
 # ---------------------------------------------------------------------------
@@ -279,8 +280,7 @@ def mhe_samples(
     day-row per claim, reference scatter ``cms_preprocess.py:329-336``)
     — plus dv [Age, sex] and the label.  The dense tensor never exists.
     """
-    vocab = list(dx_vocab) + list(pcs_vocab)
-    n_cats = len(vocab)
+    n_cats = len(dx_vocab) + len(pcs_vocab)
     code_cols = [f"dx_ccs_{v}" for v in dx_vocab] + [
         f"pcs_ccs_{v}" for v in pcs_vocab
     ]
@@ -293,10 +293,7 @@ def mhe_samples(
         ).limit(rows)
     doy = F.dayofyear(R.parse_yyyymmdd("CLM_FROM_DT"))
     active = F.array(
-        *[
-            F.when(F.col(c) == 1, F.lit(i)).otherwise(F.lit(None))
-            for i, c in enumerate(code_cols)
-        ]
+        *[F.when(F.col(c) == 1, F.lit(i)) for i, c in enumerate(code_cols)]
     )
     flat = F.transform(
         F.filter(active, lambda x: x.isNotNull()),
@@ -320,10 +317,12 @@ def mhe_samples(
 def _prepare(spark: SparkSession, data_dir: str, **cohort_kw):
     t = load_cms_tables(spark, data_dir)
     cohort = arthritis_cohort(t["ben"], t["ip"], **cohort_kw)
-    dx = clean_crosswalk(t["dx"])
-    pcs = clean_crosswalk(t["pcs"])
-    dx_vocab, pcs_vocab = crosswalk_vocab(dx), crosswalk_vocab(pcs)
-    remapped = remap_and_label(cohort, dx, pcs)
+    dx, pcs = clean_crosswalk(t["dx"]), clean_crosswalk(t["pcs"])
+    dx_rows, pcs_rows = dx.collect(), pcs.collect()  # the only jobs
+    dx_vocab, pcs_vocab = _vocab(dx_rows), _vocab(pcs_rows)
+    remapped = _remap_and_label(
+        cohort, [(dx, dx_rows, S.DGNS_COLS), (pcs, pcs_rows, S.PRCDR_COLS)]
+    )
     encoded = occurrence_columns(remapped, dx_vocab, pcs_vocab)
     return encoded, dx_vocab, pcs_vocab
 

@@ -31,6 +31,29 @@ def shuffle_partitions_for_bytes(input_bytes: int, floor: int = 4) -> int:
     return max(floor, min(8192, input_bytes // (32 << 20) + floor))
 
 
+def driver_memory_for_box(
+    cap_mb: int = 48 * 1024, meminfo: str = "/proc/meminfo"
+) -> str:
+    """Driver heap as a Spark size string: 60% of physical RAM
+    (``MemTotal``), capped at ``cap_mb``; the cap itself when MemTotal
+    can't be read (no ``/proc``).
+
+    A heap sized past RAM keeps growing before GC pressure kicks in, and
+    the kernel OOM-kills the JVM instead of Spark spilling (a 48g heap on
+    a 15 GB, 4-core box died at ~13-15 GB RSS); 60% leaves room for the
+    JVM's off-heap memory, the Python workers and the OS.
+    """
+    try:
+        with open(meminfo) as f:
+            for line in f:
+                if line.startswith("MemTotal:"):
+                    total_mb = int(line.split()[1]) // 1024  # reported in kB
+                    return f"{min(cap_mb, total_mb * 6 // 10)}m"
+    except (OSError, ValueError, IndexError):
+        pass
+    return f"{cap_mb}m"
+
+
 def get_spark(
     app_name: str = "orx-surgical-spark",
     master: str | None = None,
@@ -41,7 +64,7 @@ def get_spark(
     """Create (or reuse) a SparkSession with scale-aware defaults.
 
     Environment overrides: ``SPARK_GRAFT_CPUS`` (threads for local
-    master), ``SPARK_GRAFT_DRIVER_MEM``.
+    master), ``SPARK_GRAFT_DRIVER_MEM`` (else :func:`driver_memory_for_box`).
     """
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "").strip()
     if master is None:
@@ -51,7 +74,9 @@ def get_spark(
         # overhead at test scale and AQE coalesces the rest.
         shuffle_partitions = int(cpus) if cpus.isdigit() else (os.cpu_count() or 8)
     if driver_memory is None:
-        driver_memory = os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g")
+        driver_memory = (
+            os.environ.get("SPARK_GRAFT_DRIVER_MEM") or driver_memory_for_box()
+        )
 
     builder = (
         SparkSession.builder.master(master)

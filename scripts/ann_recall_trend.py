@@ -91,10 +91,12 @@ def main() -> int:
 
     from pyspark.sql import SparkSession
 
+    from orx_surgical_spark.session import driver_memory_for_box
+
     spark = (
         SparkSession.builder.master(f"local[{args.cpus}]")
         .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", "24g")
+        .config("spark.driver.memory", driver_memory_for_box(24 * 1024))
         .getOrCreate()
     )
     spark.sparkContext.setLogLevel("ERROR")

@@ -57,6 +57,8 @@ def main() -> int:
 
     from pyspark.sql import SparkSession
 
+    from orx_surgical_spark.session import driver_memory_for_box
+
     # Same heap sizing rule as soak.py: pyspark's 1g default OOMs on
     # the power iteration's 2080-expression Gram aggregate at sf0.1+.
     input_bytes = sum(
@@ -65,7 +67,9 @@ def main() -> int:
         for f in files
         if f.endswith(".parquet")
     ) if os.path.isdir(args.sf_dir) else 0
-    driver_memory = "24g" if input_bytes > 100 * 1024 * 1024 else "4g"
+    driver_memory = driver_memory_for_box(
+        24 * 1024 if input_bytes > 100 * 1024 * 1024 else 4 * 1024
+    )
     spark = (
         SparkSession.builder.master(f"local[{args.cpus}]")
         .config("spark.ui.enabled", "false")

@@ -108,8 +108,9 @@ def main() -> int:
         "SF: pyspark's default 1g OOMs on the sf0.1 MLP fit after 20+ "
         "queries of accumulated session state (r6), which measures the "
         "JVM default, not the engine. Default auto-scales with the "
-        "probe input size (4g under ~500MB input, 12g above — the sf1 "
-        "tiles OOM'd a 4g heap on the model fits, r6).",
+        "probe input size (4g / 24g / 48g tiers, each clamped to 60% of "
+        "physical RAM — the sf1 tiles OOM'd a 4g heap on the model fits, "
+        "r6).",
     )
     args = ap.parse_args()
     if args.driver_memory is None:
@@ -129,12 +130,17 @@ def main() -> int:
         # Third tier for the sf10 probe (~1.3GB on disk): 3.3x the sf3
         # inputs through the same one-JVM local[N] session; 48g keeps
         # the decade scale-up off the GC cliff the 12g->24g jump fixed.
+        # Each tier is clamped to 60% of physical RAM: a heap past RAM
+        # gets the JVM OOM-killed instead of spilling.
+        from orx_surgical_spark.session import driver_memory_for_box
+
         if input_bytes > 1024 * 1024 * 1024:
-            args.driver_memory = "48g"
+            tier_mb = 48 * 1024
         elif input_bytes > 100 * 1024 * 1024:
-            args.driver_memory = "24g"
+            tier_mb = 24 * 1024
         else:
-            args.driver_memory = "4g"
+            tier_mb = 4 * 1024
+        args.driver_memory = driver_memory_for_box(tier_mb)
         print(
             f"[soak] input {input_bytes / 1e6:.0f} MB -> driver heap "
             f"{args.driver_memory}",

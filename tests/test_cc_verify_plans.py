@@ -117,3 +117,33 @@ def test_cc_loop_result_no_hint_above_census_bound(spark):
     corpus = spark.range(0, 50).select(F.col("id").alias("doc_id"))
     joined = corpus.join(comp, corpus["doc_id"] == comp["node"], "left")
     assert "BroadcastHashJoin" not in _formatted(joined)
+
+
+def test_jaccard_verify_stats_read_failure_drops_hint_keeps_rows(
+    spark, monkeypatch, tmp_path
+):
+    """The size estimate is a private Spark API read: when it raises,
+    the verify join loses its broadcast hint, not its rows."""
+    from py4j.protocol import Py4JError
+
+    from orx_surgical_spark.operators import dedup as D
+
+    def hinted(df) -> bool:
+        return "strategy=broadcast" in df._jdf.queryExecution().analyzed().toString()
+
+    # parquet-backed, so the estimate is small and the hint fires
+    _docs(spark).write.parquet(str(tmp_path / "docs"))
+    docs = spark.read.parquet(str(tmp_path / "docs"))
+    cands = D.lsh_candidate_pairs(docs, max_bucket=64)
+    verified = D.jaccard_verify(cands, docs)
+    assert hinted(verified)
+    want = sorted(map(tuple, verified.collect()))
+
+    def broken(df):
+        raise Py4JError("stats() unavailable")
+
+    monkeypatch.setattr(D, "_plan_size_bytes", broken)
+    fallback = D.jaccard_verify(cands, docs)
+    assert not hinted(fallback)
+    assert sorted(map(tuple, fallback.collect())) == want
+    assert len(want) > 0
