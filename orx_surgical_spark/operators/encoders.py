@@ -207,76 +207,83 @@ def stratified_split_exact(
     out: str = "split",
 ) -> DataFrame:
     """E7 exact-proportion stratified split: within each label, order by
-    the md5 of the key (deterministic, uniform) and take the first
+    ``(md5(key), key)`` (deterministic, uniform) and take the first
     ``ceil(train_frac * n)`` rows as train.  Reproduces the reference's
     ``train_test_split(stratify=y)`` proportions exactly
     (``cms_preprocess.py:364-365``) without seed state or
-    parallel-array alignment bugs (SURVEY §7 risk: E7).
+    parallel-array alignment bugs (SURVEY §7 risk: E7).  Output columns:
+    ``label_col``, the other input columns in order, then ``out``.
 
-    Scale shape: a naive ``row_number() over (partition by label)``
-    sorts the ENTIRE dataset into |labels| partitions — two straggler
-    tasks at 100 TB.  Instead, bucket the hash into 2^16 ranges and
-    find, per label, the bucket holding the ``ceil(frac*n)``-th row
-    from a tiny (label, bucket) histogram; rows in buckets strictly
-    below/above the boundary are classified by PROJECTION (no shuffle
-    of the main data), and only the ~n/65536 rows inside each label's
-    boundary bucket pay a rank window.
+    Scale shape: the plan references the input three times and never
+    shuffles its rows (a ``row_number() over (partition by label)``
+    would sort everything into |labels| straggler tasks):
+
+    1. a (label, 16-bit md5 bucket) histogram, ≤ 65536 rows per label,
+       whose running count finds each label's boundary bucket (the one
+       holding the ``ceil(frac*n)``-th row) and the rank ``r`` in it;
+    2. the ~n/65536 rows per label inside that bucket, sorted per label,
+       give the cut: the r-th ``(md5, key)``, i.e. the last train row;
+    3. main rows are classified by one broadcast join of the per-label
+       (boundary bucket, cut) and one projection: train iff the bucket
+       is below the boundary, or equal to it and ``(md5, key) <= cut``.
+
+    A union of a projected branch and a rank-window branch held the
+    input six times: on perfbench's ``cms_features`` inputs (seed 7,
+    4 cores) writing ``get_aov`` scanned ``ip.csv`` 6 times in 13-14
+    jobs / 28-32 stages, against 3 times in 10 jobs / 20 stages here.
+
+    NULL labels form their own stratum, as in the DuckDB oracle's
+    ``PARTITION BY label``.  The null-safe joins that needs are used
+    only when the label column is nullable; a non-null label keeps
+    plain equi-joins, which hold less JVM heap.  Every input row is
+    output exactly once, and all rows sharing a key (duplicates, or NULL
+    keys, which rank after every other key) share a split: when copies
+    straddle the cut they all go to train, so a label's train count can
+    exceed ``ceil(frac*n)`` by fewer than that key's copies.
     """
     h = F.md5(F.col(key).cast("string").cast("binary"))
     bucket = F.conv(F.substring(h, 1, 4), 16, 10).cast("int")
-    d = df.withColumn("__h", h).withColumn("__b", bucket)
+    d = df.withColumn("__h", h).withColumn("__b", F.coalesce(bucket, F.lit(65536)))
+    narrow = d.select(label_col, "__b", F.struct("__h", key).alias("__o"))
+    same_label = (
+        F.col(label_col).eqNullSafe(F.col("__l"))
+        if df.schema[label_col].nullable
+        else F.col(label_col) == F.col("__l")
+    )
 
-    # Tiny histogram: ≤ 65536 rows per label, so the cumulative window
-    # and the per-label aggregate run on aggregate-sized data only.
-    hist = d.groupBy(label_col, "__b").agg(F.count(F.lit(1)).alias("__c"))
-    wcum = Window.partitionBy(label_col).orderBy("__b")
-    wlab = Window.partitionBy(label_col)
-    cum = (
-        hist.withColumn("__cum", F.sum("__c").over(wcum))
-        .withColumn("__take", F.ceil(F.sum("__c").over(wlab) * F.lit(train_frac)))
-    )
-    # Boundary bucket = first bucket whose cumulative count reaches the
-    # take; within it, keep rank <= __r (take minus rows below it).
-    bstar = (
-        cum.where(F.col("__cum") >= F.col("__take"))
-        .groupBy(label_col)
-        .agg(F.min("__b").alias("__bstar"))
-    )
-    bounds = (
-        cum.join(bstar, on=label_col)
-        .where(F.col("__b") == F.col("__bstar"))
+    # Histogram, running count and per-label take in one window pass;
+    # the boundary bucket is the one row per label where the take falls.
+    w = Window.partitionBy(label_col).orderBy("__b")
+    whole = w.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
+    c, cum, take = F.col("__c"), F.col("__cum"), F.col("__take")
+    bound = (
+        narrow.groupBy(label_col, "__b")
+        .agg(F.count(F.lit(1)).alias("__c"))
         .select(
-            label_col,
-            "__bstar",
-            (F.col("__take") - (F.col("__cum") - F.col("__c"))).alias("__r"),
+            label_col, "__b", "__c",
+            F.sum("__c").over(w).alias("__cum"),
+            F.ceil(F.sum("__c").over(whole) * F.lit(train_frac)).alias("__take"),
+        )
+        .where((cum - c < take) & (take <= cum))
+        .select(
+            F.col(label_col).alias("__l"),
+            F.col("__b").alias("__bstar"),
+            (take - (cum - c)).cast("int").alias("__r"),
         )
     )
-    base = d.join(F.broadcast(bounds), on=label_col, how="left")
-
-    # Clear rows: strictly below the boundary bucket → train, strictly
-    # above → test. Pure projection over the scan.
-    clear = base.where(F.col("__b") != F.col("__bstar")).withColumn(
-        out,
-        F.when(F.col("__b") < F.col("__bstar"), F.lit("train")).otherwise(
-            F.lit("test")
-        ),
+    # The cut: the r-th (md5, key) among the boundary bucket's rows.
+    cut = (
+        narrow.join(F.broadcast(bound), same_label & (F.col("__b") == F.col("__bstar")))
+        .groupBy("__l", "__bstar", "__r")
+        .agg(F.element_at(F.sort_array(F.collect_list("__o")), F.col("__r")).alias("__cut"))
     )
-    # Boundary rows: rank within (label, boundary bucket) — a window
-    # over ~1/65536th of each label's rows.
-    wedge = Window.partitionBy(label_col).orderBy("__h", key)
-    edge = (
-        base.where(F.col("__b") == F.col("__bstar"))
-        .withColumn("__rn", F.row_number().over(wedge))
-        .withColumn(
-            out,
-            F.when(F.col("__rn") <= F.col("__r"), F.lit("train")).otherwise(
-                F.lit("test")
-            ),
-        )
-        .drop("__rn")
+    below = F.col("__b") < F.col("__bstar")
+    at_cut = (F.col("__b") == F.col("__bstar")) & (F.struct("__h", key) <= F.col("__cut"))
+    rest = [name for name in df.columns if name not in (label_col, out)]
+    return d.join(F.broadcast(cut), same_label, "left").select(
+        label_col, *rest,
+        F.when(below | at_cut, F.lit("train")).otherwise(F.lit("test")).alias(out),
     )
-    drop = ["__h", "__b", "__bstar", "__r"]
-    return clear.unionByName(edge).drop(*drop)
 
 
 def stratified_sample_split(

@@ -237,7 +237,8 @@ def aov_features(
     per patient, ``y<year>_<col>`` = max ``col`` over its rows in that
     year for [Age, sex, codes] x len(years), ``label`` = max label over
     its final-year rows.  Kept iff it has a final-year row (even with a
-    NULL label); NULLs and missing years fill with 0.  ``leak_label=True``
+    NULL label); NULLs and missing years fill with 0, and ``label`` is
+    declared non-null so the split keeps its plain equi-joins.  ``leak_label=True``
     also keeps the per-year labels as features — the reference's leakage
     (SURVEY §2-E3), for parity studies only.  ONE aggregate per patient
     (perfbench ``cms.aov``, seed 7, vocab 8 + 4: construction 0.96 ->
@@ -255,7 +256,8 @@ def aov_features(
     ]
     return (
         encoded.groupBy("DESYNPUF_ID")
-        .agg(*per_year, F.max(F.when(final, F.col("label"))).alias("label"),
+        .agg(*per_year,
+             F.coalesce(F.max(F.when(final, F.col("label"))), F.lit(0)).alias("label"),
              F.bool_or(final).alias("__final"))
         .filter("__final").drop("__final").na.fill(0)
     )

@@ -43,6 +43,96 @@ def test_stratified_split_exact_proportions(events):
         assert counts[(label, "train")] == math.ceil(n * 0.8)  # exact per label
 
 
+def _oracle_splits(rows, frac):
+    """Per-row split under the registered oracle's rule, run in DuckDB:
+    row_number over (partition by label order by md5(key), key) <=
+    ceil(frac * n) is train.  ``rows`` are (id, key, label) tuples."""
+    import duckdb
+    import pandas as pd
+
+    con = duckdb.connect()
+    frame = pd.DataFrame(rows, columns=["id", "key", "label"])
+    con.register("t", frame.astype({"label": "Int64"}))
+    got = con.execute(f"""
+        SELECT id, CASE WHEN ROW_NUMBER() OVER (
+                 PARTITION BY label ORDER BY md5(CAST(key AS VARCHAR)), key
+               ) <= CEIL(COUNT(*) OVER (PARTITION BY label) * {frac})
+               THEN 'train' ELSE 'test' END AS split
+        FROM t""").fetchall()
+    con.close()
+    return dict(got)
+
+
+def _spark_splits(spark, rows, frac):
+    df = spark.createDataFrame(rows, "id int, key string, label int")
+    out = E.stratified_split_exact(df, "label", "key", frac)
+    return {r["id"]: r["split"] for r in out.select("id", "split").collect()}
+
+
+def test_stratified_split_exact_null_label_is_a_stratum(spark):
+    """NULL labels form their own stratum, as the oracle's PARTITION BY
+    label does: no row is dropped and every (label, split) count equals
+    the oracle's."""
+    from collections import Counter
+
+    rows = [(i, f"k{i}", None if i % 5 == 0 else i % 2) for i in range(40)]
+    label = {i: lab for i, _, lab in rows}
+    for frac in (0.5, 0.8):
+        got = _spark_splits(spark, rows, frac)
+        want = _oracle_splits(rows, frac)
+        assert len(got) == len(rows)
+        assert Counter((label[i], s) for i, s in got.items()) == Counter(
+            (label[i], s) for i, s in want.items()
+        )
+
+
+def test_stratified_split_exact_crowded_boundary_bucket(spark):
+    """Rows sharing the boundary bucket are ranked by (md5, key) one by
+    one: 20 keys with one 16-bit md5 prefix, mixed with ordinary keys,
+    get exactly the oracle's per-row split.  Label 1 is mostly crowded
+    keys, so its boundary falls inside the crowded bucket."""
+    import hashlib
+    import itertools
+
+    def prefix(k):
+        return hashlib.md5(k.encode()).hexdigest()[:4]
+
+    target = prefix("c0")
+    crowded = list(itertools.islice(
+        (k for k in (f"c{i}" for i in itertools.count()) if prefix(k) == target), 20
+    ))
+    keys = [(k, 1 if j < 14 else 0) for j, k in enumerate(crowded)]
+    keys += [(f"o{i}", 1 if i < 5 else 0) for i in range(150)]
+    rows = [(i, k, lab) for i, (k, lab) in enumerate(keys)]
+    for frac in (0.0, 0.5, 0.8, 1.0):
+        assert _spark_splits(spark, rows, frac) == _oracle_splits(rows, frac), frac
+
+
+def test_stratified_split_exact_duplicate_keys(spark):
+    """Duplicated (and NULL) keys: every input row is output exactly
+    once, all rows of one key share a split, and a label's train count
+    exceeds ceil(frac * n) by fewer than one key's copies."""
+    import math
+    from collections import Counter
+
+    rows = [(i, None if i >= 116 else f"k{i % 47}", i % 2) for i in range(120)]
+    out = E.stratified_split_exact(
+        spark.createDataFrame(rows, "id int, key string, label int"),
+        "label", "key", 0.5,
+    ).collect()
+    assert sorted(r["id"] for r in out) == list(range(120))
+    by_key = {}
+    for r in out:
+        by_key.setdefault((r["label"], r["key"]), set()).add(r["split"])
+    assert all(len(s) == 1 for s in by_key.values()), by_key
+    copies = Counter((lab, key) for _, key, lab in rows)
+    for label in (0, 1):
+        n = sum(1 for *_, lab in rows if lab == label)
+        train = sum(1 for r in out if r["label"] == label and r["split"] == "train")
+        most = max(c for (lab, _), c in copies.items() if lab == label)
+        assert math.ceil(n * 0.5) <= train < math.ceil(n * 0.5) + most
+
+
 def test_mhe_sparse_vector_shape_and_content(events):
     idx_df, n_cats = E.mhe_sparse_indices(events, ["user_id"], "ts", "event_type")
     vecs = E.mhe_sparse_vectors(events, ["user_id"], "ts", "event_type")

@@ -5,7 +5,7 @@ property over many generated rows at once)."""
 import math
 
 import numpy as np
-from hypothesis import given, settings
+from hypothesis import example, given, settings
 from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
@@ -36,6 +36,8 @@ def test_trapezoid_auc_bounded(points):
     st.floats(-5, 5, allow_nan=False),
 )
 @settings(max_examples=100, deadline=None)
+@example(weights=[1.0], bias=0.0)
+@example(weights=[4.0], bias=0.0)
 def test_linear_sigmoid_model_in_unit_interval(weights, bias):
     predict = linear_sigmoid_model(weights, bias)()
     x = np.linspace(-10, 10, 7 * len(weights)).reshape(7, len(weights))

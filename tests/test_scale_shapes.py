@@ -121,6 +121,25 @@ def test_stratified_split_exact_not_label_partitioned(spark):
         assert counts[(label, "train")] == math.ceil(n * 0.8)
 
 
+def test_stratified_split_exact_scans_input_three_times(spark, tmp_path):
+    """The split's plan holds its input three times (histogram, boundary
+    bucket, main rows), so a file input is scanned at most 3 times (the
+    union-of-branches form scanned it 4 times here, 6 times in the CMS
+    pipeline)."""
+    from orx_surgical_spark.operators.encoders import stratified_split_exact
+
+    path = str(tmp_path / "split_input")
+    spark.range(2_000).select(
+        F.col("id").alias("key"), (F.col("id") % 3).cast("int").alias("label")
+    ).write.parquet(path)
+    out = stratified_split_exact(spark.read.parquet(path), "label", "key", 0.8)
+    assert len(out.collect()) == 2_000
+    final = out._jdf.queryExecution().executedPlan().toString().split(
+        "== Initial Plan =="
+    )[0]
+    assert 1 <= final.count("Scan parquet") <= 3, final
+
+
 def test_runtime_bloom_filter_injection(spark, sf_dir):
     """Runtime row-level filtering: with a selective filter on the
     orders side of a shuffle join, Catalyst injects a bloom filter
